@@ -9,10 +9,10 @@ JVM-side, codegen, no UDFs), and any rollup — other grouping sets,
 new-data-only refreshes, cross-table unions — is a SKETCH MERGE, which
 is associative, commutative and idempotent-friendly: merging loses
 nothing beyond the sketch's own resolution — the merged estimate
-tracks sketching the raw union within estimator-mode rounding (the
-union path may finish in a different HLL target mode than the direct
-agg, so the two integers can differ by ±1-ish even when both are a
-fraction of a percent from truth; pinned in tests) — so a
+tracks sketching the raw union within the sketch's standard error,
+but not to a fixed ±1: once past coupon mode the two integers depend
+on merge order and partitioning (570 distinct values: merged 572 vs
+direct 575 under one 4-way hash repartitioning) — so a
 dashboard can answer "distinct users this quarter" by merging 90 daily
 sketches instead of rescanning 90 days of events.
 
@@ -21,9 +21,12 @@ rollup table (committed via snaplog.Materialization like every other
 derived cache) keyed by the finest grouping you will ever need, and
 serve every coarser grouping by ``merge_sketches`` over it.
 
-Estimates are approximate (HLL standard error ~1.04/sqrt(2^lgk);
-lgConfigK=12 default ≈ 1.6%): use ``approx=True`` dashboards, never
-joins/filters that need exact semantics.
+Estimates are exact only while a sketch is in coupon (list/set) mode,
+which ends at 3/4 · 2^(lgk-3) coupons — 384 at the lgConfigK=12
+default, so a few hundred distinct values.  Past that they are
+approximate (HLL standard error ~1.04/sqrt(2^lgk); lgConfigK=12
+default ≈ 1.6%): use ``approx=True`` dashboards, never joins/filters
+that need exact semantics.
 """
 
 from __future__ import annotations

@@ -292,11 +292,11 @@ def test_sketch_merge_identity_and_rollup(spark):
     """Merging per-group sketches is as good as sketching the raw
     union: the merged grand-total estimate must land within the
     sketch's error of BOTH the exact cardinality and the direct-agg
-    estimate (the two integers may differ by estimator-mode rounding:
-    the union path can finish in a different HLL target mode — 570 vs
-    571 observed — while both stay a fraction of a percent from
-    truth), and small per-group cardinalities are exact (sparse
-    mode)."""
+    estimate.  The 570 distinct users are past the 384-coupon
+    promotion of lgk=12, so the grand total is in HLL mode and neither
+    estimate is guaranteed exact (570-575 observed, varying with core
+    count, merge order and partitioning); the per-day cardinalities of
+    120 are below it and stay exact (coupon mode)."""
     rows = [
         (f"d{day}", f"u{uid}")
         for day in range(10)
@@ -316,8 +316,8 @@ def test_sketch_merge_identity_and_rollup(spark):
     ).collect()[0].e
     assert abs(merged.distinct_est - direct) <= 1  # estimator-mode rounding
     assert merged.n_rows == len(rows)
-    # the merged estimate is the true cardinality here (sparse regime)
-    assert merged.distinct_est == exact_total
+    # past lgk=12's 384-coupon promotion: 1.04/sqrt(2**12) standard error
+    assert abs(merged.distinct_est - exact_total) <= 1.04 / 64 * exact_total
     assert abs(direct - exact_total) <= max(1, 0.02 * exact_total)
     # row-wise union column
     two = (
