@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from bigsdb_spark.inventory.registry import register, tbl
+from bigsdb_spark.materialize import materialize
 from bigsdb_spark.operators.dedup import (
     embedding_near_duplicates,
     exact_duplicate_pairs,
@@ -395,12 +396,12 @@ def dedup_jaccard(spark, sf_dir):
     scale path: LSH prunes the pair space, candidate-driven intersection
     joins verify. Work is linear in candidates, not corpus²."""
     # materialize the shingle set once: it feeds the signature pipeline
-    # AND both sides of the candidate intersection join. localCheckpoint
-    # (not .cache()) — the caller gets no handle to unpersist, so a
-    # cache would leak one storage entry per invocation
-    sh = word_shingles(
-        tbl(spark, sf_dir, "documents"), "doc_id", "text", k=3
-    ).localCheckpoint(eager=True)
+    # AND both sides of the candidate intersection join (not .cache():
+    # the caller gets no handle to unpersist, so a cache would leak one
+    # storage entry per invocation)
+    sh = materialize(
+        word_shingles(tbl(spark, sf_dir, "documents"), "doc_id", "text", k=3)
+    )
     sig = minhash_signatures(sh, n_hashes=8)
     cand = lsh_candidate_pairs(sig, n_hashes=8, band_size=2)
     return ngram_jaccard(sh, pairs=cand)
@@ -721,7 +722,7 @@ def policy_suite_tiers(spark, sf_dir, only: set | None = None) -> dict:
     """Per-tier frames behind ``t_policy_suite`` (bench sub-timings).
 
     Building the ``dsir_*`` tiers is eager (the shared gram frame is
-    localCheckpoint-ed so the explode runs once for fit AND score);
+    materialized so the explode runs once for fit AND score);
     pass ``only`` (a set of tier names) to skip that eager work when
     timing just the lazy rep/contam/pii tiers."""
     from bigsdb_spark.operators.corpus import (
@@ -789,11 +790,11 @@ def policy_suite_tiers(spark, sf_dir, only: set | None = None) -> dict:
     # score every doc, and Gumbel-top-k sample 20% — both the full
     # weight column and the selected sample are value-checked.
     docs_src = tbl(spark, sf_dir, "documents").select("doc_id", "text", "source")
-    # grams feed BOTH the fit and the score; checkpoint so the explode
-    # runs once (localCheckpoint, not cache — no unpersist handle here)
-    grams = hashed_gram_buckets(
-        docs_src, "doc_id", "text", buckets=_DSIR_BUCKETS
-    ).localCheckpoint(eager=True)
+    # grams feed BOTH the fit and the score; materialize so the explode
+    # runs once (not cache — no unpersist handle here)
+    grams = materialize(
+        hashed_gram_buckets(docs_src, "doc_id", "text", buckets=_DSIR_BUCKETS)
+    )
     target = docs_src.filter(F.col("source").isin("src0", "src1")).select("doc_id")
     ratios = dsir_log_ratios(grams, target, "doc_id", buckets=_DSIR_BUCKETS)
     scored = dsir_scores(grams, ratios, "doc_id")

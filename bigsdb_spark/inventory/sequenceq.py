@@ -18,6 +18,7 @@ from bigsdb_spark.functions.sequence import (
     sequence_md5,
     translate_dna,
 )
+from bigsdb_spark.materialize import materialize
 
 # F4 oracle side: the standard genetic code as a VALUES CTE, generated
 # from the SAME table the pandas UDF uses so the two spellings cannot
@@ -121,11 +122,13 @@ def f10_partial(spark, sf_dir):
     d = docs.select(
         "doc_id", dna_expr("text").alias("seq")
     ).filter(F.length("seq") >= 60)
-    alleles = d.select(
-        F.lit("locus1").alias("locus"),
-        F.col("doc_id").cast("string").alias("allele_id"),
-        F.substring("seq", 1, 60).alias("sequence"),
-    ).localCheckpoint(eager=True)
+    alleles = materialize(
+        d.select(
+            F.lit("locus1").alias("locus"),
+            F.col("doc_id").cast("string").alias("allele_id"),
+            F.substring("seq", 1, 60).alias("sequence"),
+        )
+    )
     mut = F.concat(
         F.substring("sequence", 1, 4),
         F.translate(F.substring("sequence", 5, 1), "ACGT", "CGTA"),

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from bigsdb_spark.inventory.registry import register, tbl
+from bigsdb_spark.materialize import materialize
 from bigsdb_spark.operators.asof import asof_join, asof_join_salted
 from bigsdb_spark.operators.sessions import epoch_seconds, sessionize, tumbling_counts
 
@@ -68,18 +69,20 @@ def a11_daily(spark, sf_dir):
     # more times (hot-key counts, the semi/anti splits, the bounds
     # union) — re-deriving them per reference re-ran the scan + the
     # state groupBy exchange once per occurrence (54 shuffle exchanges
-    # in the r12 plan).  Materialize each ONCE (eager localCheckpoint:
-    # purchase-state is one row per (user, ts); probes are three
-    # narrow columns) and let every leg read the checkpoint blocks.
-    # Values are unchanged — same expressions, computed once.
-    state = (
+    # in the r12 plan).  Materialize each ONCE (purchase-state is one
+    # row per (user, ts); probes are three narrow columns) and let
+    # every leg read the checkpoint blocks.  Values are unchanged —
+    # same expressions, computed once.
+    state = materialize(
         e.filter(F.col("event_type") == "purchase")
         .groupBy("user_id", "ts")
         .agg(F.max("value").alias("state_value"))
-    ).localCheckpoint(eager=True)
-    probes = e.filter(F.col("event_type").isin("click", "view")).select(
-        "user_id", "ts", "event_type"
-    ).localCheckpoint(eager=True)
+    )
+    probes = materialize(
+        e.filter(F.col("event_type").isin("click", "view")).select(
+            "user_id", "ts", "event_type"
+        )
+    )
     def asof_leg(matched, tag):
         return (
             matched.groupBy(

@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from bigsdb_spark.materialize import materialize, release
+
 
 def asof_join(
     left: DataFrame,
@@ -203,7 +205,12 @@ def asof_join_salted(
     # side empty (skipped outright below).
     lc = left.groupBy(*keys).count()
     rc = right.filter(F.col(right_ts).isNotNull()).groupBy(*keys).count()
-    totals = (
+    # one row per key — the smallest frame in the operator.  Materialize
+    # it ONCE (r13): hot is re-derived per broadcast reference (three
+    # joins + the carry grid), and the dispatch / cold-existence probes
+    # become take(1)s over checkpoint blocks instead of re-running both
+    # per-key counts and their full-outer join per reference.
+    totals = materialize(
         lc.withColumnRenamed("count", "__cl")
         .join(rc.withColumnRenamed("count", "__cr"), keys, "full_outer")
         .select(
@@ -213,16 +220,16 @@ def asof_join_salted(
                 + F.coalesce(F.col("__cr"), F.lit(0))
             ).alias("__tot"),
         )
-        # one row per key — the smallest frame in the operator.
-        # Materialize it ONCE (r13): hot is re-derived per broadcast
-        # reference (three joins + the carry grid), and the dispatch /
-        # cold-existence probes become take(1)s over checkpoint blocks
-        # instead of re-running both per-key counts and their
-        # full-outer join per reference.
-        .localCheckpoint(eager=True)
     )
-    hot = totals.filter(F.col("__tot") > hot_threshold).select(*keys)
+    # a key with a NULL column never equi-joins, so it can never take
+    # the hot path: it stays cold, and the one predicate below keeps
+    # the hot filter and the cold-existence probe complementary
+    is_hot = F.col("__tot") > hot_threshold
+    for k in keys:
+        is_hot = is_hot & F.col(k).isNotNull()
+    hot = totals.filter(is_hot).select(*keys)
     if not hot.take(1):
+        release(totals)  # the plain path never reads it
         return asof_join(
             left, right, on, left_ts, right_ts, direction, tolerance, suffix
         )
@@ -235,7 +242,7 @@ def asof_join_salted(
     # instead of running it to produce zero rows.  The hot_threshold=0
     # "everything hot" configuration paid for a full cold plan before.
     cold_out = None
-    if totals.filter(F.col("__tot") <= hot_threshold).take(1):
+    if totals.filter(~is_hot).take(1):
         cold_out = asof_join(
             left.join(hot_b, keys, "left_anti"),
             right.join(hot_b, keys, "left_anti"),
@@ -245,7 +252,9 @@ def asof_join_salted(
     # -- hot slice: range-bucket each key's timeline -------------------
     l_hot = left.join(hot_b, keys, "left_semi")
     r_hot = right.join(hot_b, keys, "left_semi")
-    bounds = (
+    # one row per hot key; read twice (both bucket taggers) — same
+    # materialize-once rationale as the hot set above
+    bounds = materialize(
         l_hot.select(*keys, _ts_double(l_hot, left_ts).alias("__tv"))
         .unionByName(
             r_hot.select(
@@ -254,9 +263,6 @@ def asof_join_salted(
         )
         .groupBy(*keys)
         .agg(F.min("__tv").alias("__lo"), F.max("__tv").alias("__hi"))
-        # one row per hot key; read twice (both bucket taggers) — same
-        # materialize-once rationale as the hot set above
-        .localCheckpoint(eager=True)
     )
     bounds_b = F.broadcast(bounds)
 

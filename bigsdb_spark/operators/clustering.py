@@ -26,7 +26,8 @@ import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from bigsdb_spark.materialize import materialize, release
 
 
 def _rdd_count(df: DataFrame) -> int:
@@ -65,140 +66,6 @@ CC_LOCAL_EDGE_ROWS = int(
 )
 
 
-def _free_local_checkpoint(df: DataFrame) -> None:
-    """Best-effort release of a localCheckpoint's stored blocks.
-
-    Spark keeps each localCheckpoint's partitions in the block manager
-    for the lifetime of the session (ContextCleaner only reclaims them
-    after the Python reference is GC'd, which lags under memory
-    pressure). An iterative algorithm that checkpoints every round
-    therefore accumulates one dead copy of the working set per round —
-    at 1.6e7 nodes that alone exhausts a 16g local JVM. No public API
-    frees them, so reach the LogicalRDD's backing RDD through py4j and
-    unpersist it; on any interface drift just let ContextCleaner do it.
-    """
-    try:
-        src = getattr(df, "_ckpt_handle", df)
-        src._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
-
-
-# inherited-stats bit-length above which checkpoint_no_stats rebuilds
-# the Dataset to reset sizeInBytes (r11, VERDICT r10 #4).  The growth
-# is ~2x bits/round (each round's join multiplies two frames carrying
-# the prior round's estimate), so 4096 bits = rebuild every ~6 rounds;
-# BigInt arithmetic below ~2^8192 is sub-microsecond, and the estimate
-# is equally meaningless at 64 or 4096 bits (anything past 2^63 bytes
-# exceeds addressable storage), so nothing downstream can distinguish
-# the two except the multiply cost this bounds.
-STATS_REBUILD_BITS = 4096
-
-
-def checkpoint_no_stats(
-    df: DataFrame,
-    storage_level=None,
-    check_stats: bool = True,
-    bits_out: list | None = None,
-) -> DataFrame:
-    """localCheckpoint that also DROPS the plan statistics the
-    checkpoint would otherwise inherit (r10).
-
-    ``Dataset.localCheckpoint`` copies the optimized plan's ESTIMATED
-    statistics into the resulting LogicalRDD, and Catalyst's non-CBO
-    size estimator multiplies child sizes at every join
-    (SizeInBytesOnlyStatsPlanVisitor.visitJoin -> default = product of
-    children).  In an iterative join loop those two facts compound:
-    round r's checkpoint carries the product-of-products of every
-    earlier round, so the BigInt bit-length grows EXPONENTIALLY with
-    rounds — and with a nested loop (boruvka_mst calling
-    single_linkage every round) doubly so.  Observed r10: the d7 gate
-    fold's 150-node MST ground a single core for 18+ minutes inside
-    BigInteger.multiplyToomCook3 on million-digit sizeInBytes values
-    (jstack: SizeInBytesOnlyStatsPlanVisitor.visitJoin ->
-    scala.collection.IterableOnceOps.product).
-
-    Rebuilding the Dataset from the checkpointed internal RDD drops
-    the copied originStats, so sizeInBytes resets to
-    spark.sql.defaultSizeInBytes (one Long, 63 bits) at every round
-    boundary and planning cost stays flat for ANY number of rounds.
-    Trade: the checkpointed frame is never auto-broadcast (its size
-    estimate is the conservative default) — irrelevant in these loops,
-    whose inflated pre-fix estimates already disqualified broadcast.
-    Falls back to the plain checkpoint on py4j interface drift.  The
-    returned frame carries the raw checkpoint as ``_ckpt_handle`` so
-    ``_free_local_checkpoint`` can still release its blocks.
-
-    r11 (VERDICT r10 #4): the rebuild is now CONDITIONAL.  The r10
-    form rebuilt every round, paying the py4j round trips +
-    re-analysis of a fresh Dataset once per iteration whether or not
-    the inherited estimate was pathological (d4's measured same-host
-    cost: 1.12x at sf0.1 — NOT a partitioning loss; under AQE even a
-    plain localCheckpoint's LogicalRDD reports UnknownPartitioning,
-    AdaptiveSparkPlanExec hides the final partitioning from
-    fromDataset, so post-checkpoint joins re-shuffle in BOTH forms —
-    verified by plan probe, r11).  Since the blowup is geometric (~2x
-    bits/round), it is enough to CHECK the inherited estimate's bit
-    length (one py4j stats read of the already-computed LogicalRDD
-    stats, no job) and rebuild only past ``STATS_REBUILD_BITS`` —
-    most rounds return the raw checkpoint untouched, the BigInt stays
-    bounded, and the 18-minute multiplyToomCook3 pathology stays dead
-    (regression covered by test_mst's nested-fold timing and
-    test_checkpoint_no_stats_* in tests/test_stats_clustering.py).
-
-    Physical-plan note (r12, ADVICE r11): because most rounds now keep
-    the RAW checkpoint, a frame whose inherited estimate is small and
-    sane KEEPS those stats — so a post-checkpoint join can newly
-    qualify for auto-broadcast, which the r10 always-rebuild form
-    (defaultSizeInBytes on every round) never allowed.  That is the
-    intended behaviour: a genuinely small checkpointed frame SHOULD be
-    broadcastable (the r10 form pessimised it by accident), and an
-    inflated estimate disqualifies broadcast in both forms.  The only
-    frames whose estimate flips from huge-junk to default are the
-    rebuilt ones past STATS_REBUILD_BITS, where the junk estimate had
-    already disqualified broadcast — so no plan regresses from
-    broadcast to shuffle; broadcast eligibility under sane stats is
-    pinned in tests/test_stats_clustering.py.
-
-    ``check_stats=False`` skips the py4j stats read entirely and
-    returns the raw checkpoint (r12, VERDICT r11 #6): in an iterative
-    loop the bit growth is geometric and predictable, so the caller
-    can read stats every k rounds instead of every round — see
-    ``single_linkage``'s cadence.  ``bits_out``: pass a list to
-    receive the read bit length (for deriving that cadence)."""
-    if storage_level is not None:
-        ck = df.localCheckpoint(eager=True, storageLevel=storage_level)
-    else:
-        ck = df.localCheckpoint(eager=True)
-    spark = df.sparkSession
-    out = ck
-    if not check_stats:
-        out._ckpt_handle = ck
-        return out
-    try:
-        jdf = ck._jdf
-        size = jdf.queryExecution().analyzed().stats().sizeInBytes()
-        # py4j hands scala BigInt back as a Python int (via the
-        # BigInteger converter); keep a JavaObject fallback for drift
-        try:
-            bits = int(size).bit_length()
-        except (TypeError, ValueError):
-            bits = size.bigInteger().bitLength()
-        if bits_out is not None:
-            bits_out.append(bits)
-        if bits > STATS_REBUILD_BITS:
-            out = DataFrame(
-                spark._jsparkSession.internalCreateDataFrame(
-                    jdf.queryExecution().toRdd(), jdf.schema(), False
-                ),
-                spark,
-            )
-    except Exception:
-        out = ck
-    out._ckpt_handle = ck
-    return out
-
-
 def _cc_single_task(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     """Connected components of a SMALL symmetric edge frame in one
     vectorized task: min-label hooking + full pointer compression per
@@ -206,26 +73,43 @@ def _cc_single_task(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     component's smallest member id — the same fixed point as the
     iterative loop, so output is identical by construction (pinned in
     tests over random graphs and chains).  Caller guarantees the edge
-    frame fits one task (see CC_LOCAL_EDGE_ROWS)."""
+    frame fits one task (see CC_LOCAL_EDGE_ROWS).
+
+    The node ids ride into the task beside the edges as flagged rows
+    (one shuffle, no join, so no extra job), and edges with an
+    endpoint outside ``nodes`` are dropped there — the distributed
+    loop's label joins drop them the same way."""
     from typing import Iterator
 
     import pyarrow as pa
 
-    id_type = dict(edges.dtypes)["id1"]
+    col = nodes.columns[0]
+    rows = edges.select("id1", "id2", F.lit(False).alias("_node")).unionByName(
+        nodes.filter(F.col(col).isNotNull()).select(
+            F.col(col).alias("id1"), F.col(col).alias("id2"), F.lit(True).alias("_node")
+        )
+    )
+    id_type = dict(rows.dtypes)["id1"]
 
     def _uf(batches):
         import numpy as np
 
-        a_parts, b_parts = [], []
+        a_parts, b_parts, n_parts = [], [], []
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            a_parts.append(rb.column(0).to_numpy(zero_copy_only=False))
-            b_parts.append(rb.column(1).to_numpy(zero_copy_only=False))
+            node = rb.column(2).to_numpy(zero_copy_only=False)
+            a = rb.column(0).to_numpy(zero_copy_only=False)
+            n_parts.append(a[node])
+            a_parts.append(a[~node])
+            b_parts.append(rb.column(1).to_numpy(zero_copy_only=False)[~node])
         if not a_parts:
             return
+        node_ids = np.unique(np.concatenate(n_parts))
         a = np.concatenate(a_parts)
         b = np.concatenate(b_parts)
+        keep = np.isin(a, node_ids) & np.isin(b, node_ids)
+        a, b = a[keep], b[keep]
         ids = np.unique(np.concatenate([a, b]))
         ia = np.searchsorted(ids, a)
         ib = np.searchsorted(ids, b)
@@ -259,10 +143,10 @@ def _cc_single_task(edges: DataFrame, nodes: DataFrame) -> DataFrame:
         "batches": Iterator[pa.RecordBatch],
         "return": Iterator[pa.RecordBatch],
     }
-    lab = edges.repartition(1).mapInArrow(
+    lab = rows.repartition(1).mapInArrow(
         _uf, schema=f"id {id_type}, group_id {id_type}"
     )
-    all_nodes = nodes.select(F.col(nodes.columns[0]).alias("id"))
+    all_nodes = nodes.select(F.col(col).alias("id"))
     return all_nodes.join(lab, on="id", how="left").select(
         "id", F.coalesce("group_id", F.col("id")).alias("group_id")
     )
@@ -289,20 +173,13 @@ def single_linkage(
     convergence check otherwise short-circuits at the first hit), so
     leave it None outside probes.
     """
-    import math as _math
     import time as _time
-    # serialized MEMORY_AND_DISK blocks (PySpark's MEMORY_AND_DISK is
-    # JVM-serialized): ~3-5x smaller than the deserialized default and
-    # evictable to disk, so a big edge set can't pin the whole heap
-    ckpt_level = StorageLevel.MEMORY_AND_DISK
-    edges = checkpoint_no_stats(
+    # joined every round: materialized so the upstream pair-distance
+    # self-join runs once
+    edges = materialize(
         pairs.select("id1", "id2")
         .union(pairs.select(F.col("id2").alias("id1"), F.col("id1").alias("id2")))
-        .distinct(),
-        storage_level=ckpt_level,
-        # joined every round: don't re-run the upstream pair-distance
-        # self-join once per iteration; stats dropped so an upstream
-        # join-inflated estimate can't seed the per-round product
+        .distinct()
     )
     # ONE single-job count decides both dispatches below (r13; the
     # .count() form cost two jobs under AQE)
@@ -320,10 +197,8 @@ def single_linkage(
     # right-size the iteration: a small graph on 32 shuffle partitions
     # pays ~32x task overhead per round for nothing
     if n_edges < 1_000_000:
-        small = checkpoint_no_stats(
-            edges.repartition(8, "id2"), storage_level=ckpt_level
-        )
-        _free_local_checkpoint(edges)
+        small = materialize(edges.repartition(8, "id2"))
+        release(edges)
         edges = small
     labels = nodes.select(F.col(nodes.columns[0]).alias("id")).withColumn(
         "group_id", F.col("id")
@@ -372,16 +247,14 @@ def single_linkage(
             )
             .withColumnRenamed("new_group_id", "group_id")
         )
-        materialized = checkpoint_no_stats(
-            updated, storage_level=ckpt_level
-        )  # one job/round; stats dropped past the threshold — the
-        # labels x edges x parent join product would otherwise double
-        # the sizeInBytes BigInt's bit-length every round (see
-        # checkpoint_no_stats)
+        # one job/round; stats reset past the threshold — the labels x
+        # edges x parent join product would otherwise double the
+        # sizeInBytes BigInt's bit-length every round (see materialize)
+        materialized = materialize(updated)
         # the previous round's checkpoint is dead the moment this one
         # exists — free its blocks so rounds don't stack up in the heap
         if prev_ckpt is not None:
-            _free_local_checkpoint(prev_ckpt)
+            release(prev_ckpt)
         prev_ckpt = materialized
         labels = materialized.select("id", "group_id")
         if round_stats is not None:
@@ -399,6 +272,7 @@ def single_linkage(
         # cheap scan of the checkpointed partitions — no recompute
         if materialized.filter(F.col("_changed")).limit(1).count() == 0:
             break
+    release(edges)  # the labels checkpoint no longer reads the edges
     return labels
 
 
@@ -425,125 +299,3 @@ def burst_slv_dlv(pair_dist: DataFrame) -> DataFrame:
     )
     w = Window.orderBy(F.desc("slv"), F.desc("dlv"), F.asc("id"))
     return counts.withColumn("founder_rank", F.row_number().over(w))
-
-
-def connected_components_star(
-    pairs: DataFrame, nodes: DataFrame, max_iter: int = 50
-) -> DataFrame:
-    """Connected components by alternating large-star/small-star
-    contraction (public design: Kiveris et al., "Connected Components
-    in MapReduce and Beyond", SoCC 2014) — the in-engine ALTERNATIVE
-    to ``single_linkage``'s label propagation, removing the need for
-    an external GraphFrames dependency either way.
-
-    Same contract as ``single_linkage``: ``pairs`` (id1, id2) edges,
-    ``nodes`` (id) the full node set; returns (id, group_id) with
-    group_id = smallest member id (singletons label themselves);
-    output equality is pinned over random graphs in tests.
-
-    Trade-off, MEASURED (tools/scale_bench.py, giant-component random
-    graph, local[32]): propagation wins on this shape — 64 s vs 135 s
-    at 4e6 nodes — because pointer-halving converges in ~log(diameter)
-    rounds on a low-diameter graph while star contraction pays two
-    groupBy/join passes plus a full edge-set fixed-point check per
-    round.  Star contraction's advantage is the regime where the
-    paper's bound bites: per-round edge VOLUME shrinks geometrically
-    as stars collapse, so on very-high-diameter graphs (long chains)
-    or when each round's shuffle dominates (network-bound clusters),
-    it is the safer shape.  ``single_linkage`` stays the serving
-    default; this is the documented fallback for adversarial
-    diameters.
-    """
-    edges = checkpoint_no_stats(
-        pairs.select(F.col("id1").alias("u"), F.col("id2").alias("v"))
-        .union(
-            pairs.select(F.col("id2").alias("u"), F.col("id1").alias("v"))
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct(),
-        storage_level=StorageLevel.MEMORY_AND_DISK,
-    )
-
-    def _min_nbr(e: DataFrame) -> DataFrame:
-        # m(u) = min(N(u) ∪ {u})
-        return e.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-
-    for _ in range(max_iter):
-        # large-star: for each neighbor v > u, attach v under m(u)
-        m = _min_nbr(edges)
-        large = (
-            edges.filter(F.col("v") > F.col("u"))
-            .join(m, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        # keep (u, m(u)) links so smaller neighbors aren't lost
-        keep = m.select("u", F.col("m").alias("v"))
-        e1 = (
-            large.union(keep)
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star: for each neighbor v <= u, attach v under m(u)
-        sym1 = e1.union(
-            e1.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).distinct()
-        m1 = _min_nbr(sym1)
-        small = (
-            sym1.filter(F.col("v") < F.col("u"))
-            .join(m1, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        keep1 = m1.select("u", F.col("m").alias("v"))
-        new_edges = checkpoint_no_stats(
-            small.union(keep1)
-            .filter(F.col("u") != F.col("v"))
-            .distinct(),
-            storage_level=StorageLevel.MEMORY_AND_DISK,
-        )
-        # fixed point: every node's edges point only at one min —
-        # i.e. the symmetric closure no longer changes the hang-offs.
-        # TRUE set equality, not just no-additions: exceptAll alone
-        # would break on a strictly-shrinking round whose output is
-        # not yet a star forest (labels would then be wrong on
-        # chain-shaped leftovers).
-        sym_new = checkpoint_no_stats(
-            new_edges.union(
-                new_edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            )
-            .distinct(),
-            storage_level=StorageLevel.MEMORY_AND_DISK,
-        )
-        _free_local_checkpoint(new_edges)  # superseded by sym_new
-        unchanged = (
-            sym_new.count() == edges.count()
-            and sym_new.exceptAll(edges).limit(1).count() == 0
-        )
-        _free_local_checkpoint(edges)  # previous round, now dead
-        edges = sym_new
-        if unchanged:
-            break
-    else:
-        # exhausting max_iter without reaching the fixed point means
-        # the hang-offs are still moving: labels on the unconverged
-        # chains would be silently wrong, which is worse than failing
-        # (this path advertises adversarial-diameter graphs, exactly
-        # where a fixed round budget is likeliest to bind)
-        raise RuntimeError(
-            f"connected_components_star did not converge within "
-            f"{max_iter} rounds; raise max_iter (rounds needed grow "
-            "with log(diameter))"
-        )
-    # components: each node hangs off its minimum; the minimum itself
-    # has edges only to larger nodes, so label = min(m, self)
-    labels = edges.groupBy("u").agg(
-        F.least(F.min("v"), F.first("u")).alias("group_id")
-    )
-    all_nodes = nodes.select(F.col(nodes.columns[0]).alias("id"))
-    return (
-        all_nodes.join(labels, all_nodes["id"] == labels["u"], "left")
-        .select(
-            "id", F.coalesce("group_id", F.col("id")).alias("group_id")
-        )
-    )

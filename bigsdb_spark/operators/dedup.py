@@ -26,8 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from bigsdb_spark.materialize import materialize
 from bigsdb_spark.operators.spread import spread_scan
 
 _WS = r"\s+"
@@ -283,15 +283,13 @@ def lsh_candidate_pairs(
             for b in range(n_bands)
         ]
     )
-    banded = (
+    # self-joined below: materialized once, before the self-join, so
+    # both join subtrees read the same blocks instead of recomputing
+    # (a .cache() here leaked one storage entry per call — the caller
+    # had no handle to unpersist)
+    banded = materialize(
         signatures.select(F.col("doc"), F.explode(bands).alias("bb"))
         .select("doc", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-        # self-joined below; localCheckpoint materializes once WITHOUT a
-        # permanent cache entry (a .cache() here leaked storage memory on
-        # every call — the caller had no handle to unpersist; checkpoint
-        # blocks are released when the plan is garbage-collected)
-        .localCheckpoint()  # eager: materialized before the self-join, so
-        # both join subtrees read the same blocks instead of recomputing
     )
     a = banded.alias("a")
     b = banded.alias("b")
@@ -427,12 +425,10 @@ def lsh_candidate_pairs_salted(
             for b in range(n_bands)
         ]
     )
-    banded = (
-        signatures.select(F.col("doc"), F.explode(bands).alias("bb"))
-        .select(
+    banded = materialize(
+        signatures.select(F.col("doc"), F.explode(bands).alias("bb")).select(
             "doc", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
         )
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
     hot_keys = (
         banded.groupBy("band", "bucket")

@@ -572,18 +572,8 @@ def assign_lincodes(
 
     import numpy as np
 
-    # opt-in per-batch phase timing (stderr), for floor attribution on
-    # ladder runs: SPARK_GRAFT_D5_DEBUG=1
-    import os as _os
-    import sys as _sys
-    import time as _time
-
-    _dbg = _os.environ.get("SPARK_GRAFT_D5_DEBUG") == "1"
-    _t_iter = _time.time()
-
     key_to_idx: dict = {}
     for rows_batch in _row_batches():
-        _t_fetch = _time.time()
         # rows stream in global sorted order, so everything coded so
         # far is exactly key < batch_ids[0]: the scan side is a RANGE
         # FILTER on the cached profile frame.  The r11 form uploaded
@@ -605,7 +595,6 @@ def assign_lincodes(
                     int(r["diffs"]),
                     float(r["distance"]),
                 )
-        _t_scan = _time.time()
         # sequential resolution inside the (bounded) batch, vectorized:
         # each profile compares against the batch members coded before
         # it in ONE numpy pass (the old per-pair python loop was
@@ -666,17 +655,6 @@ def assign_lincodes(
             coded_ids.append(key)
             bmat[k], blen[k] = arr, len(cur)
             k += 1
-        if _dbg:
-            _now = _time.time()
-            print(
-                f"d5_batch coded={len(codes) - len(batch_ids)} "
-                f"fetch={_t_fetch - _t_iter:.2f} "
-                f"scan={_t_scan - _t_fetch:.2f} "
-                f"inbatch={_now - _t_scan:.2f}",
-                file=_sys.stderr,
-                flush=True,
-            )
-        _t_iter = _time.time()
 
     out = [(coded_ids[i], codes[i]) for i in range(len(coded_ids))]
     prof.unpersist()

@@ -47,11 +47,8 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from bigsdb_spark.operators.clustering import (
-    _free_local_checkpoint,
-    _rdd_count,
-    checkpoint_no_stats,
-)
+from bigsdb_spark.materialize import materialize, release
+from bigsdb_spark.operators.clustering import _rdd_count
 
 __all__ = ["boruvka_mst", "kruskal_mst_py"]
 
@@ -175,15 +172,11 @@ def boruvka_mst(
         .groupBy("u", "v")
         .agg(F.min("w").alias("w"))
     )
-    # checkpoint_no_stats, not plain localCheckpoint: a checkpoint
-    # COPIES the optimized plan's estimated sizeInBytes, and Catalyst's
-    # size estimator multiplies child sizes at every join — an
-    # iterative loop that checkpoints join outputs therefore grows the
-    # stats BigInt EXPONENTIALLY in rounds.  The r10 d7 gate fold hit
-    # it for real: an 18-minute single-core BigInteger.multiply grind
-    # on a 150-node graph.  Dropping stats at every round boundary
-    # keeps planning O(1) per round.
-    canon = checkpoint_no_stats(canon)
+    # materialize resets the inherited size estimate, which an
+    # iterative loop of checkpointed joins would otherwise grow
+    # exponentially in rounds (the r10 d7 gate fold: an 18-minute
+    # single-core BigInteger.multiply grind on a 150-node graph)
+    canon = materialize(canon)
     limit = MST_LOCAL_EDGE_ROWS if local_edge_rows is None else local_edge_rows
     if _rdd_count(canon) <= limit:
         return _mst_single_task(canon)
@@ -220,7 +213,7 @@ def boruvka_mst(
         # consumed exactly once, so it no longer needs its own
         # checkpoint (the old form read it twice via unionAll).
         pick = F.struct("w", "u", "v", "cu", "cv").alias("e")
-        pmap = checkpoint_no_stats(
+        pmap = materialize(
             live.select(F.explode(F.array("cu", "cv")).alias("c"), pick)
             .groupBy("c")
             .agg(F.min("e").alias("e"))
@@ -230,7 +223,7 @@ def boruvka_mst(
         # or .count()'s two-stage aggregate
         n_live = _rdd_count(pmap)
         if n_live == 0:
-            _free_local_checkpoint(pmap)
+            release(pmap)
             break
         # C is known exactly: hint the C-row merge joins to broadcast
         # when they fit (see BROADCAST_COMPONENT_ROWS)
@@ -269,7 +262,7 @@ def boruvka_mst(
             .otherwise(F.col("a.p"))
             .alias("p"),
         )
-        p = checkpoint_no_stats(rooted)
+        p = materialize(rooted)
         # the re-rooted forest's depth is < n_live and doubling halves
         # the remaining depth every pass, so ceil(log2(n_live)) + 1
         # passes ALWAYS suffice — bound the inner loop independently
@@ -282,7 +275,7 @@ def boruvka_mst(
         moved = 0
         for _ in range(inner_rounds):
             a, b = p.alias("a"), p.alias("b")
-            nxt = checkpoint_no_stats(
+            nxt = materialize(
                 a.join(bcast(b), F.col("a.p") == F.col("b.c")).select(
                     F.col("a.c").alias("c"),
                     F.col("b.p").alias("p"),
@@ -290,7 +283,7 @@ def boruvka_mst(
                 )
             )
             moved = _rdd_count(nxt.filter(F.col("_moved")))
-            _free_local_checkpoint(p)
+            release(p)
             p = nxt
             if moved == 0:
                 break
@@ -303,18 +296,22 @@ def boruvka_mst(
         relabel = p.select(
             F.col("c").alias("comp"), F.col("p").alias("_new")
         )
-        new_comp = checkpoint_no_stats(
+        new_comp = materialize(
             comp.join(bcast(relabel), "comp", "left").select(
                 "id", F.coalesce("_new", "comp").alias("comp")
             )
         )
-        _free_local_checkpoint(p)
+        release(p)
         if comp_is_ours:
-            _free_local_checkpoint(comp)
+            release(comp)
         comp = new_comp
         comp_is_ours = True
+    if comp_is_ours:
+        release(comp)
     if mst is None:
         return canon.limit(0)
+    # the picked edges read only their own pmap checkpoints
+    release(canon)
     return mst.select("u", "v", "w").distinct()
 
 

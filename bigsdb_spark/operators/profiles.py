@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from bigsdb_spark.materialize import materialize
+
 WILDCARD = "N"
 ABSENT = "0"
 
@@ -610,8 +612,7 @@ def _assign_wildcard_pruned(
         # checkpoint of 1e9 deserialized rows OOM'd a 24 GB heap) or
         # (b) letting the pass lineage NEST (the un-checkpointed form
         # re-ran pass i inside pass i+1's broadcast — O(k^2) scans,
-        # 796 s at cg_1e6).  Only the N-ROW minima checkpoint (lazy;
-        # storage freed when the frames are garbage collected).
+        # 796 s at cg_1e6).  Only the N-ROW minima are materialized.
         packed = cost.select(
             "profile_key", "pos", "allele", pack.alias("_pk")
         )
@@ -623,12 +624,14 @@ def _assign_wildcard_pruned(
                 stage = stage.join(
                     F.broadcast(prev), on="profile_key"
                 ).filter(F.col("_pk") > F.col("_prev"))
-            m = stage.groupBy("profile_key").agg(
-                F.min("_pk").alias("_prev"),
-                F.min_by(F.struct("pos", "allele"), F.col("_pk")).alias(
-                    "_b"
-                ),
-            ).localCheckpoint(eager=False)
+            m = materialize(
+                stage.groupBy("profile_key").agg(
+                    F.min("_pk").alias("_prev"),
+                    F.min_by(F.struct("pos", "allele"), F.col("_pk")).alias(
+                        "_b"
+                    ),
+                )
+            )
             legs.append(
                 m.select(
                     "profile_key",

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from bigsdb_spark.materialize import materialize
+
 
 def _dot(a, b) -> Column:
     prods = F.zip_with(
@@ -270,12 +272,12 @@ def cosine_topk_pairs_np(
             F.collect_list("vid").alias("ids"),
             F.collect_list("v").alias("vecs"),
         )
-        # materialize once: the b1 and b2 join subtrees both reference
-        # this aggregation, and without a barrier the whole-corpus
-        # groupBy/collect_list would execute twice (exchange reuse is
-        # not guaranteed across differently-aliased subtrees)
-        .localCheckpoint(eager=True)
     )
+    # materialize once: the b1 and b2 join subtrees both reference
+    # this aggregation, and without a barrier the whole-corpus
+    # groupBy/collect_list would execute twice (exchange reuse is not
+    # guaranteed across differently-aliased subtrees)
+    blocks = materialize(blocks)
     pair_list = F.broadcast(
         emb.sparkSession.createDataFrame(
             [(b1, b2) for b1 in range(n_blocks) for b2 in range(b1, n_blocks)],

@@ -31,6 +31,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from bigsdb_spark.materialize import materialize
 from bigsdb_spark.operators.dedup import (
     lsh_candidate_pairs_grouped,
     minhash_signatures_fused,
@@ -294,14 +295,12 @@ def dedup_against_index(
             for b in range(n_bands)
         ]
     )
-    banded = (
-        sigs.select(F.col("doc"), F.explode(bands).alias("bb"))
-        .select(
+    # three consumers below (corpus hit, intra pairs, fresh index) —
+    # materialize once instead of re-shingling the delta each time
+    banded = materialize(
+        sigs.select(F.col("doc"), F.explode(bands).alias("bb")).select(
             "doc", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
         )
-        # three consumers below (corpus hit, intra pairs, fresh index) —
-        # materialize once instead of re-shingling the delta each time
-        .localCheckpoint(eager=True)
     )
     hit_corpus = (
         banded.join(index["bands"], ["band", "bucket"], "left_semi")
@@ -323,11 +322,12 @@ def dedup_against_index(
         surv_sigs, n_hashes, band_size, max_bucket=max_bucket
     )
     losers = intra.select(F.col("doc2").alias("_loser")).distinct()
-    kept_md5 = survivors.join(
-        losers, survivors[id_col] == losers["_loser"], "left_anti"
-    ).localCheckpoint(eager=True)  # three consumers (kept rows, fresh
-    # md5 slice, fresh band slice) would otherwise re-run the whole
-    # shingle/minhash/anti-join lineage once each
+    # three consumers (kept rows, fresh md5 slice, fresh band slice)
+    # would otherwise re-run the whole shingle/minhash/anti-join
+    # lineage once each
+    kept_md5 = materialize(
+        survivors.join(losers, survivors[id_col] == losers["_loser"], "left_anti")
+    )
     kept = kept_md5.drop("_md5")
     # fresh index slices come from frames already computed: the kept
     # docs' md5 column and their rows of the banded frame

@@ -19,6 +19,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from bigsdb_spark.materialize import materialize, release
+
 __all__ = ["create_new_versions", "latest_versions", "version_history"]
 
 
@@ -107,14 +109,17 @@ def latest_versions(
     ``next(next)`` adding the hop counts, so a chain of length L
     resolves in ceil(log2 L) rounds — 20 rounds covers chains of a
     million versions."""
-    nxt = isolates.select(
-        F.col(id_col).alias("id"),
-        F.coalesce("new_version", F.col(id_col)).alias("nxt"),
-        F.when(F.col("new_version").isNotNull(), F.lit(1))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("hops"),
-    ).localCheckpoint(eager=True)
+    ckpt = materialize(
+        isolates.select(
+            F.col(id_col).alias("id"),
+            F.coalesce("new_version", F.col(id_col)).alias("nxt"),
+            F.when(F.col("new_version").isNotNull(), F.lit(1))
+            .otherwise(F.lit(0))
+            .cast("long")
+            .alias("hops"),
+        )
+    )
+    nxt = ckpt
     for _ in range(max_iter):
         hop = nxt.select(
             F.col("id").alias("_j_id"),
@@ -122,16 +127,17 @@ def latest_versions(
             F.col("hops").alias("_j_hops"),
         )
         new_nxt = F.coalesce("_j_nxt", "nxt")
-        doubled = (
-            nxt.join(hop, nxt["nxt"] == hop["_j_id"], "left")
-            .select(
+        doubled = materialize(
+            nxt.join(hop, nxt["nxt"] == hop["_j_id"], "left").select(
                 "id",
                 new_nxt.alias("nxt"),
                 (F.col("hops") + F.coalesce("_j_hops", F.lit(0))).alias("hops"),
                 (new_nxt != F.col("nxt")).alias("_changed"),
             )
-            .localCheckpoint(eager=True)
         )
+        # the previous round is superseded: only one round is held
+        release(ckpt)
+        ckpt = doubled
         nxt = doubled.select("id", "nxt", "hops")
         if doubled.filter(F.col("_changed")).limit(1).count() == 0:
             break

@@ -1088,6 +1088,7 @@ def route_scheme_sequence_query(
     probe loop."""
     import base64 as _b64
 
+    from bigsdb_spark.materialize import scope
     from bigsdb_spark.plans.submission_routes import _parse_fasta_string
     from bigsdb_spark.sequence_query import sequence_query
 
@@ -1104,8 +1105,10 @@ def route_scheme_sequence_query(
         except Exception:
             raise BadRequest("Sequence is not valid base64.") from None
     pairs = _parse_fasta_string(seq)
-    result = sequence_query(spark, pairs, alleles)
-    matches = result["matches"].collect()
+    # the matches checkpoint is consumed here, once: release it per
+    # request instead of leaving one storage entry per call
+    with scope():
+        matches = sequence_query(spark, pairs, alleles)["matches"].collect()
     exact: dict = {}
     designations: dict = {}
     for r in matches:

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigsdb_spark.materialize import materialize
+
 from bigsdb_spark.operators.seqmatch import (
     exact_allele_lookup,
     ungapped_partial_matches,
@@ -42,12 +44,10 @@ def sequence_query(
     (query_id, locus, allele_id, alignment, mismatches, gaps,
     identity)."""
     q = spark.createDataFrame(sequences, "query_id string, sequence string")
-    # localCheckpoint, not .cache(): matches feeds up to three outputs
+    # materialized, not .cache(): matches feeds up to three outputs
     # (isolates/profiles/partial anti-join) but the caller gets no
-    # handle to unpersist, so a cache would leak one storage entry per
-    # REST sequence query; checkpoint blocks release when the plan is
-    # garbage-collected (the lsh_candidate_pairs lesson)
-    matches = exact_allele_lookup(q, alleles).localCheckpoint(eager=True)
+    # handle to unpersist; a serving caller's scope() releases it
+    matches = materialize(exact_allele_lookup(q, alleles))
     out = {"matches": matches}
     if partial:
         unmatched = q.join(

@@ -1,7 +1,9 @@
 """SparkSession factory.
 
-Defaults are tuned for the local[32] test harness but every knob is the
-one you would set on a 1000-executor cluster too: AQE on (runtime
+Without ``SPARK_GRAFT_CPUS`` / ``SPARK_DRIVER_MEMORY`` the session sizes
+itself to the host: ``local[os.cpu_count()]`` and a driver heap of half
+the physical memory, capped at 16g.  Every other knob is the one you
+would set on a 1000-executor cluster too: AQE on (runtime
 re-planning + skew-join handling), broadcast threshold high enough that
 dimension tables (region/nation/loci/schemes) always broadcast, UTC
 session timezone so timestamp semantics are engine-independent, and
@@ -15,12 +17,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return "16g"
+    return f"{min(16 << 10, phys // 2 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "bigsdb_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 32)
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus.isdigit() else 32
@@ -52,7 +62,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         # sample-∝-k codebook training collects ~0.5 GB of sample rows
         # (r8); the 1g default aborted the 1.6e7 train mid-ladder
         .config("spark.driver.maxResultSize", "4g")

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigsdb_spark.materialize import materialize, scope
+
 
 def read_event_stream(
     spark: SparkSession, path: str, schema=None, max_files: int = 1
@@ -763,34 +765,34 @@ def run_discovery_stream(
     def _discover(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        defs = spark.read.parquet(alleles_path).select(
-            "locus", "allele_id", "sequence"
-        )
-        try:
-            # Spark-side existence: os.path.exists would be always-False
-            # on hdfs/s3 paths and silently skip the prior union
-            prior_all = spark.read.parquet(discovered_path)
-        except AnalysisException:
-            prior_all = None  # first batch: nothing discovered yet
-        if prior_all is not None:
-            # exclude THIS batch's own partition and materialize before
-            # the overwrite below deletes it — a crash-replay of batch N
-            # would otherwise read files its own write is about to remove
-            prior = (
-                prior_all.filter(F.col("batch") != batch_id)
-                .select(
-                    "locus",
-                    F.col("new_allele_id").alias("allele_id"),
-                    "sequence",
-                )
-                .localCheckpoint(eager=True)
+        # the prior-discoveries checkpoint lives for this batch only
+        with scope():
+            defs = spark.read.parquet(alleles_path).select(
+                "locus", "allele_id", "sequence"
             )
-            defs = defs.unionByName(prior)
-        new = discover_new_alleles(
-            batch_df, defs, k=k, min_identity=min_identity,
-            contig_id=contig_id, contig_seq=contig_seq,
-        )
-        new.write.mode("overwrite").parquet(f"{discovered_path}/batch={batch_id}")
+            try:
+                # Spark-side existence: os.path.exists would be always-False
+                # on hdfs/s3 paths and silently skip the prior union
+                prior_all = spark.read.parquet(discovered_path)
+            except AnalysisException:
+                prior_all = None  # first batch: nothing discovered yet
+            if prior_all is not None:
+                # exclude THIS batch's own partition and materialize before
+                # the overwrite below deletes it — a crash-replay of batch N
+                # would otherwise read files its own write is about to remove
+                prior = materialize(
+                    prior_all.filter(F.col("batch") != batch_id).select(
+                        "locus",
+                        F.col("new_allele_id").alias("allele_id"),
+                        "sequence",
+                    )
+                )
+                defs = defs.unionByName(prior)
+            new = discover_new_alleles(
+                batch_df, defs, k=k, min_identity=min_identity,
+                contig_id=contig_id, contig_seq=contig_seq,
+            )
+            new.write.mode("overwrite").parquet(f"{discovered_path}/batch={batch_id}")
 
     q = (
         contig_stream.writeStream.foreachBatch(_discover)

@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from bigsdb_spark.operators.clustering import burst_slv_dlv, single_linkage
 from bigsdb_spark.operators.lincodes import assign_lincodes
 from bigsdb_spark.operators.stats import group_stats, n_stats
@@ -358,161 +356,24 @@ def test_cc_single_task_matches_loop(spark):
     }
 
 
-def test_star_cc_matches_label_propagation_on_fixtures(spark):
-    """large-star/small-star contraction returns exactly the
-    single_linkage labels: smallest member id per component,
-    singletons label themselves."""
-    from bigsdb_spark.operators.clustering import (
-        connected_components_star,
-        single_linkage,
-    )
+def test_single_linkage_ignores_foreign_endpoints(spark):
+    """Edges with an endpoint outside ``nodes`` neither merge nor label
+    nodes: the single-task path gives the distributed loop's labels
+    (local_edge_rows=0 forces the loop).  1 and 2 are linked only
+    through 99, and 3 only to 0, none of which is a node."""
+    from bigsdb_spark.operators.clustering import single_linkage
 
     pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 6), (8, 9), (9, 10), (10, 8)],
-        "id1 int, id2 int",
+        [(1, 99), (99, 2), (0, 3), (3, 4)], "id1 int, id2 int"
     )
-    nodes = spark.createDataFrame([(i,) for i in range(1, 12)], "id int")
-    want = {
+    nodes = spark.createDataFrame([(i,) for i in (1, 2, 3, 4)], "id int")
+    want = {(1, 1), (2, 2), (3, 3), (4, 3)}
+    fast = {(r["id"], r["group_id"]) for r in single_linkage(pairs, nodes).collect()}
+    loop = {
         (r["id"], r["group_id"])
-        for r in single_linkage(pairs, nodes).collect()
+        for r in single_linkage(pairs, nodes, local_edge_rows=0).collect()
     }
-    got = {
-        (r["id"], r["group_id"])
-        for r in connected_components_star(pairs, nodes).collect()
-    }
-    assert got == want
-    assert (4, 4) in got and (11, 11) in got  # singletons
-
-
-@pytest.mark.slow
-def test_star_cc_matches_label_propagation_on_random_graphs(spark):
-    """Seeded-random graphs (one Spark job each): star contraction and
-    label propagation must agree on every component label — including
-    chains (worst case for propagation) and dense blobs."""
-    import random
-
-    from bigsdb_spark.operators.clustering import (
-        connected_components_star,
-        single_linkage,
-    )
-
-    rng = random.Random(42)
-    for trial in range(4):
-        n = rng.randint(5, 40)
-        n_edges = rng.randint(0, n * 2)
-        edges = [
-            (rng.randint(1, n), rng.randint(1, n)) for _ in range(n_edges)
-        ]
-        # plus a long chain to stress round counts
-        chain_base = n + 1
-        edges += [(chain_base + i, chain_base + i + 1) for i in range(12)]
-        pairs = spark.createDataFrame(
-            edges or [(1, 1)], "id1 int, id2 int"
-        )
-        nodes = spark.createDataFrame(
-            [(i,) for i in range(1, chain_base + 14)], "id int"
-        )
-        want = {
-            (r["id"], r["group_id"])
-            for r in single_linkage(pairs, nodes).collect()
-        }
-        got = {
-            (r["id"], r["group_id"])
-            for r in connected_components_star(pairs, nodes).collect()
-        }
-        assert got == want, f"trial {trial}: n={n} edges={edges}"
-
-
-def test_checkpoint_no_stats_skips_rebuild_when_stats_sane(spark):
-    """r11 (VERDICT r10 #4): checkpoint_no_stats must NOT rebuild the
-    Dataset when the inherited size estimate is sane — the r10 form
-    paid py4j round trips + re-analysis of a fresh Dataset once per
-    propagation round whether or not the estimate was pathological
-    (d4's measured same-host cost: 1.12x at sf0.1).  Sane stats ->
-    the returned frame IS the raw checkpoint, and its semantics are
-    unchanged."""
-    from bigsdb_spark.operators.clustering import checkpoint_no_stats
-
-    df = (
-        spark.range(200)
-        .withColumnRenamed("id", "k")
-        .repartition(8, "k")
-    )
-    ck = checkpoint_no_stats(df)
-    # no rebuild: the returned frame IS the raw checkpoint
-    assert ck._ckpt_handle is ck
-    assert ck.count() == 200
-
-
-def test_checkpoint_no_stats_rebuilds_past_bit_bound(spark):
-    """The geometric stats blowup (join product copied by each round's
-    checkpoint doubles the sizeInBytes bit length) must still be cut:
-    once the inherited estimate exceeds STATS_REBUILD_BITS the rebuild
-    fires and resets it to one Long — the 18-minute
-    BigInteger.multiplyToomCook3 pathology (r10, d7 MST fold) stays
-    dead for ANY round count."""
-    from bigsdb_spark.operators.clustering import (
-        STATS_REBUILD_BITS,
-        checkpoint_no_stats,
-    )
-
-    def bits_of(df):
-        size = df._jdf.queryExecution().analyzed().stats().sizeInBytes()
-        return int(size).bit_length()
-
-    d = spark.createDataFrame([(i, i) for i in range(4)], "a long, b long")
-    # inflate by repeated key self-join + PLAIN checkpoint (stats
-    # copied): the non-CBO join estimate is the PRODUCT of the
-    # children regardless of the equi-key, and both sides carry the
-    # prior round's estimate, so the bit length ~doubles per round
-    # while the DATA stays 4 rows — the d7 pathology in miniature
-    for _ in range(16):
-        if bits_of(d) > STATS_REBUILD_BITS:
-            break
-        d = d.join(
-            d.select("a", F.col("b").alias("b2")), on="a"
-        ).select("a", "b")
-        d = d.localCheckpoint(eager=True)
-    assert bits_of(d) > STATS_REBUILD_BITS  # the pathology reproduced
-    out = checkpoint_no_stats(d)
-    # rebuild fired: fresh frame, stats reset to a single Long
-    assert out._ckpt_handle is not out
-    assert bits_of(out) <= 64
-
-
-def test_checkpoint_no_stats_cadence_controls(spark):
-    """r12 (VERDICT r11 #6): check_stats=False must skip the stats
-    read entirely (raw checkpoint returned untouched), and bits_out
-    must surface the read bit length on the checked path so callers
-    can derive a read-every-k-rounds cadence."""
-    from bigsdb_spark.operators.clustering import checkpoint_no_stats
-
-    df = spark.range(64).withColumnRenamed("id", "k")
-    raw = checkpoint_no_stats(df, check_stats=False)
-    assert raw._ckpt_handle is raw
-    assert raw.count() == 64
-
-    box: list = []
-    checked = checkpoint_no_stats(df, bits_out=box)
-    assert checked.count() == 64
-    assert box and 0 < box[0] <= 64  # sane estimate, one Long
-
-
-def test_checkpoint_sane_stats_keep_broadcast_eligibility(spark):
-    """r12 (ADVICE r11): with the conditional rebuild, a checkpointed
-    frame whose inherited estimate is small and sane KEEPS those stats
-    — so it can auto-broadcast in a later join, which the r10
-    always-rebuild form (defaultSizeInBytes) never allowed.  Pin the
-    intended physical behaviour: small checkpoint + big probe side ->
-    BroadcastHashJoin."""
-    from bigsdb_spark.operators.clustering import checkpoint_no_stats
-
-    small = checkpoint_no_stats(
-        spark.range(10).withColumnRenamed("id", "k")
-    )
-    big = spark.range(200_000).withColumnRenamed("id", "k")
-    plan = big.join(small, on="k")._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
+    assert fast == loop == want
 
 
 def test_lincode_kernel_equivalence():

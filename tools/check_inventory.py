@@ -18,6 +18,7 @@ import duckdb
 sys.path.insert(0, ".")
 
 from bigsdb_spark.inventory import ORACLES, QUERIES  # noqa: E402
+from bigsdb_spark.materialize import scope  # noqa: E402
 from bigsdb_spark.session import get_spark  # noqa: E402
 from bigsdb_spark.sources.tables import TABLES  # noqa: E402
 
@@ -71,9 +72,10 @@ def main():
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = sdf.collect()
+            with scope():
+                sdf = fn(spark, sf_dir)
+                scols = sdf.columns
+                srows = sdf.collect()
         except Exception as e:
             print(f"FAIL  {name}: spark error: {e}")
             failures.append(name)

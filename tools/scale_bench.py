@@ -75,7 +75,6 @@ Paths timed per tier (each skippable via --skip):
   incremental_ingest four 250k-doc deltas vs a growing corpus index
   corpus_assembly    token stats + packing + shard assignment
   single_linkage     connected components by label propagation
-  star_cc            Kiveris et al. star contraction (comparison)
 
 Usage:
   python tools/scale_bench.py [--doc-tiers 1000000,4000000]
@@ -1079,17 +1078,6 @@ def main() -> None:
             .collect()[0][0]
         )
         record("single_linkage", n, sec, f"{cnt} components")
-        if "star_cc" not in skip:
-            from bigsdb_spark.operators.clustering import (
-                connected_components_star,
-            )
-
-            sec, cnt = _timed(
-                lambda: connected_components_star(edges, nodes)
-                .select(F.countDistinct("group_id"))
-                .collect()[0][0]
-            )
-            record("star_cc", n, sec, f"{cnt} components")
 
     print(json.dumps({"scale_bench": results}), flush=True)
 
